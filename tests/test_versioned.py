@@ -388,11 +388,19 @@ def test_compact_cluster_by_tightens_skipping(spark, tmp_path):
     cluster_by must yield per-file disjoint bounds so the same predicate
     suddenly skips most files."""
     t = str(tmp_path / "tbl")
-    # two appends, each shuffled across the id range -> useless bounds
-    a = _df(spark, 0, 400).filter("id % 2 = 0").repartition(4)
-    b = _df(spark, 0, 400).filter("id % 2 = 1").repartition(4)
-    V.commit_write(a, t, mode="overwrite")
-    V.commit_write(b, t, mode="append")
+
+    # Two appends (evens, then odds) of four files each, laid out by
+    # construction rather than by a shuffle: range slice p holds rows
+    # i = 50p + j (j < 50) and maps them to id = 2(4j + p) + parity, so
+    # file p's id bounds are [2p + parity, 392 + 2p + parity] -> every
+    # file spans the range and its bounds are useless, at any core count.
+    def spanning(parity):
+        return spark.range(0, 200, 1, 4).selectExpr(
+            f"2 * (4 * (id % 50) + id div 50) + {parity} AS id"
+        ).selectExpr("id", "id * 2 AS v")
+
+    V.commit_write(spanning(0), t, mode="overwrite")
+    V.commit_write(spanning(1), t, mode="append")
     pred = [("id", ">=", 390)]
     _, kept_before, _ = V.pruned_paths(t, pred)
     assert kept_before == 8  # every file spans the range: nothing skips
